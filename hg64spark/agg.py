@@ -10,8 +10,11 @@ faster than its shared-memory path):
                              vectorized numpy ingest over Arrow batches —
                              this is the map-side combine: the shuffle then
                              carries only tiny serialized sketches, never rows
-    stage 2  groupBy(keys)   shuffle of <= (#partitions x #groups) sketch blobs
-    stage 3  applyInPandas   associative integer merge + serialize
+    stage 2  repartition     shuffle of <= (#partitions x #groups) sketch blobs,
+                             hash-partitioned by group key
+    stage 3  mapInArrow      one task per partition segments its Arrow
+                             batches by group and runs the associative merge
+                             + serialize once per group (:func:`fold_groups`)
 
 Skew note (north_rule): because stage 1 emits at most one sketch per group per
 *partition*, a conversation with a billion rows costs its partitions ingest
@@ -44,9 +47,6 @@ from pyspark.sql.types import (
 )
 
 from hg64spark.hg64 import HG64
-
-_GLOBAL_KEY = "__hg64_global__"
-
 
 def _group_schema(df: DataFrame, group_cols: Sequence[str]) -> list[StructField]:
     by_name = {f.name: f for f in df.schema.fields}
@@ -232,6 +232,79 @@ def sketch_partials(
     return narrow.mapInArrow(build, out_schema)
 
 
+#: output bounds of one ``fold_groups`` record batch: a task folding many
+#: groups (or many large Bloom blobs) yields several modest batches instead of
+#: one unbounded one
+_FOLD_BATCH_ROWS = 4096
+_FOLD_BATCH_BYTES = 16 << 20
+
+
+def fold_groups(
+    df: DataFrame,
+    group_cols: Sequence[str],
+    fold: Callable[[pa.Table], bytes],
+) -> DataFrame:
+    """(group..., sketch binary): one row per group of ``df``, the sketch
+    being ``fold`` applied to that group's other columns as one Arrow table.
+
+    The frame is repartitioned by the group columns (``repartition(1)`` for
+    a global fold: never ``coalesce(1)``, which would pull the upstream stage
+    into the same single task) and each partition runs ONE ``mapInArrow``
+    task: every batch is segmented with :func:`segment_record_batch`, each
+    group's rows are gathered across batches with a single ``take``, and the
+    folded rows leave in record batches of bounded size.  No per-group
+    Python call crosses the JVM boundary, and no sort precedes the fold.
+    Zero input rows give an empty frame."""
+    group_cols = list(group_cols)
+    n = len(group_cols)
+    fields = _group_schema(df, group_cols) + [StructField("sketch", BinaryType(), False)]
+    names = [f.name for f in fields]
+    payload = [c for c in df.columns if c not in group_cols]
+    narrow = df.select(*group_cols, *payload)
+    shuffled = narrow.repartition(*group_cols) if group_cols else narrow.repartition(1)
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        kept: list[pa.RecordBatch] = []
+        rows: dict[tuple, list[np.ndarray]] = {}
+        base = 0
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            kept.append(rb)
+            segs = segment_record_batch(rb, n) if n else [((), np.arange(rb.num_rows))]
+            for key, idx in segs:
+                rows.setdefault(key, []).append(idx + base)
+            base += rb.num_rows
+        if not rows:
+            return
+        keys = list(rows)
+        lengths = [sum(ix.size for ix in rows[k]) for k in keys]
+        table = pa.Table.from_batches(kept).select(payload)
+        table = table.take(np.concatenate([ix for k in keys for ix in rows[k]]))
+        key_types = [kept[0].schema.field(i).type for i in range(n)]
+
+        def emit(ks: list[tuple], blobs: list[bytes]) -> pa.RecordBatch:
+            arrays = [pa.array([k[i] for k in ks], type=t) for i, t in enumerate(key_types)]
+            return pa.RecordBatch.from_arrays(arrays + [pa.array(blobs, pa.binary())], names=names)
+
+        out_keys: list[tuple] = []
+        out_blobs: list[bytes] = []
+        size = start = 0
+        for key, length in zip(keys, lengths):
+            blob = fold(table.slice(start, length))
+            start += length
+            out_keys.append(key)
+            out_blobs.append(blob)
+            size += len(blob)
+            if len(out_keys) >= _FOLD_BATCH_ROWS or size >= _FOLD_BATCH_BYTES:
+                yield emit(out_keys, out_blobs)
+                out_keys, out_blobs, size = [], [], 0
+        if out_keys:
+            yield emit(out_keys, out_blobs)
+
+    return shuffled.mapInArrow(run, StructType(fields))
+
+
 def merge_sketches(
     partials: DataFrame,
     group_cols: Sequence[str],
@@ -239,13 +312,8 @@ def merge_sketches(
 ) -> DataFrame:
     """Stages 2+3: shuffle partial sketches by group key and reduce them with
     the associative merge (`hg64_merge` semantics, `/root/reference/hg64.c:297-305`)."""
-    group_cols = list(group_cols)
-    fields = [f for f in partials.schema.fields if f.name in group_cols]
-    out_schema = StructType(fields + [StructField("sketch", BinaryType(), False)])
-    grouped = partials if group_cols else partials.withColumn(_GLOBAL_KEY, F.lit(0))
-    keys = group_cols or [_GLOBAL_KEY]
 
-    def reduce_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    def merge(t: pa.Table) -> bytes:
         # canonical merge order (sort by blob bytes): hg64/HLL/CMS/Bloom
         # merges are order-insensitive so this changes nothing for them, but
         # KLL, t-digest AND MG are order-SENSITIVE — MG runs _shrink after
@@ -258,15 +326,13 @@ def merge_sketches(
         # seeds make the distributed build bit-reproducible at ANY cluster
         # size (the north rule's identical-estimates criterion, asserted
         # across the N-vs-4N scaling probe in bench.py).
-        blobs = pdf["sketch"].sort_values(key=lambda s: s.map(bytes))
-        sk = deserialize(blobs.iloc[0])
-        for b in blobs.iloc[1:]:
+        blobs = sorted(t.column("sketch").to_pylist())
+        sk = deserialize(blobs[0])
+        for b in blobs[1:]:
             sk.merge(deserialize(b))
-        out = {c: [pdf[c].iloc[0]] for c in group_cols}
-        out["sketch"] = [sk.serialize()]
-        return pd.DataFrame(out, columns=[f.name for f in out_schema.fields])
+        return sk.serialize()
 
-    return grouped.groupBy(*keys).applyInPandas(reduce_group, out_schema)
+    return fold_groups(partials.select(*group_cols, "sketch"), group_cols, merge)
 
 
 def sketch_agg(

@@ -139,13 +139,6 @@ def _shingles_sql(base: str, k: int = SHINGLE_K) -> str:
 SHINGLE_DF_CAP = 256
 
 
-def rare_shingle_set(corpus: DataFrame, k: int = SHINGLE_K, df_cap: int = SHINGLE_DF_CAP) -> DataFrame:
-    """The shingles whose document frequency is within the cap — the
-    semi-join filter every skew-sensitive consumer applies."""
-    s = shingles(corpus, k)
-    return s.groupBy("sh").agg(F.count("*").alias("df")).filter(F.col("df") <= df_cap).select("sh")
-
-
 def hot_shingle_set(corpus: DataFrame, k: int = SHINGLE_K, df_cap: int = SHINGLE_DF_CAP) -> DataFrame:
     """The OVER-cap shingles — tiny by construction (<= |doc-shingle
     pairs| / cap, zipfian in practice), which is what makes the anti-join

@@ -582,7 +582,7 @@ def q_mg_top_parts_rel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_mg_top_tools_by_role(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-GROUP Misra-Gries: one frequent-items summary per role through the
-    generic grouped sketch protocol (mapInArrow partials + applyInPandas
+    generic grouped sketch protocol (mapInArrow partials + mapInArrow
     merge — the first string-valued sketch through that path), bracket-gated
     per (role, tool) against the exact counts."""
     from hg64spark.sketches import MG

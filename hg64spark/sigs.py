@@ -26,10 +26,6 @@ def digits_to_sigbits(digits: float) -> int:
     return int(math.ceil(convert_sigs(digits, 10, 2)))
 
 
-def sigbits_to_digits(sigbits: float) -> float:
-    return convert_sigs(sigbits, 2, 10)
-
-
 def tables() -> str:
     """The exact text the reference `sigs` binary prints (`sigs.c:30-45`)."""
     out = ["conversion tables between significant digits and bits", ""]

@@ -293,14 +293,14 @@ def test_bloom_global_over_driver_cap_stays_executor_side(spark, monkeypatch):
     big = relational._BLOOM_DRIVER_FOLD_MAX_BITS * 2
     executor_df = relational.bloom_agg_relational(vals, "v", big, 3)
     plan = executor_df._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" in plan  # over the cap: no driver collect
+    assert "MapInArrow" in plan  # over the cap: executor-side fold, no driver collect
     executor_blob = bytes(executor_df.collect()[0]["sketch"])
     monkeypatch.setattr(relational, "_BLOOM_DRIVER_FOLD_MAX_BITS", big)
     driver_df = relational.bloom_agg_relational(vals, "v", big, 3)
     # (at this size the hex literal overflows localrel's SQL cap, so the
     # result frame itself falls back to createDataFrame — the fold is
     # still the driver one, and byte-equality is the contract)
-    assert "FlatMapGroupsInPandas" not in (
+    assert "MapInArrow" not in (
         driver_df._jdf.queryExecution().executedPlan().toString()
     )
     assert bytes(driver_df.collect()[0]["sketch"]) == executor_blob
@@ -588,18 +588,107 @@ def test_tree_aggregate_path_matches(spark):
     assert tree == rel
 
 
-def test_grouped_fold_pandas_and_arrow_byte_identical(spark):
-    """The per-group applyInPandas fold and the Arrow-segmented fold must
-    produce byte-identical blobs (incl. a null group value)."""
+def test_grouped_fold_matches_local_tier_blobs(spark):
+    """The relational grouped fold must give, per group, the exact bytes of
+    a local-tier ``HG64(5).add_values`` build over that group's values
+    (incl. a null group value)."""
     from hg64spark import relational
 
-    df = spark.createDataFrame(
-        [("a", 1), ("a", 100), ("b", 7), (None, 3), ("b", 2**40), (None, 9)],
+    rows = [("a", 1), ("a", 100), ("b", 7), (None, 3), ("b", 2**40), (None, 9)]
+    df = spark.createDataFrame(rows, "g string, v long").repartition(3)
+    got = {r["g"]: bytes(r["sketch"]) for r in relational.hg64_agg_relational(df, "v", ["g"], 5).collect()}
+    want = {
+        g: HG64(5).add_values(np.array([v for k, v in rows if k == g], dtype=np.uint64)).serialize()
+        for g in ("a", "b", None)
+    }
+    assert got == want
+
+
+def _nan_safe(key):
+    return tuple("NaN" if isinstance(k, float) and k != k else k for k in key)
+
+
+#: (rows, schema, group columns) per fold case; every case runs with
+#: two-row Arrow batches so groups span batches on both the partial and the
+#: fold side
+_FOLD_CASES = {
+    "spans_batches": (
+        [(f"g{i % 3}", i * 37 + 1) for i in range(30)],
         "g string, v long",
-    ).repartition(3)
-    a = {r["g"]: bytes(r["sketch"]) for r in relational.hg64_agg_relational(df, "v", ["g"], 5, fold="arrow").collect()}
-    p = {r["g"]: bytes(r["sketch"]) for r in relational.hg64_agg_relational(df, "v", ["g"], 5, fold="pandas").collect()}
-    assert a == p and set(a) == {"a", "b", None}
+        ["g"],
+    ),
+    "null_and_nan_keys": (
+        [(k, v) for v, k in enumerate([1.5, None, float("nan"), 1.5, None, float("nan"), -2.0] * 3)],
+        "g double, v long",
+        ["g"],
+    ),
+    "two_group_cols": (
+        [(f"a{i % 2}", i % 3, i * 1000 + 7) for i in range(24)],
+        "a string, b int, v long",
+        ["a", "b"],
+    ),
+    "zero_rows": ([], "g string, v long", ["g"]),
+    "global": ([(None, i * i + 5) for i in range(25)], "g string, v long", []),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_FOLD_CASES))
+def test_fold_groups_matches_local_tier(spark, case):
+    """``agg.fold_groups`` — behind ``merge_sketches`` (Arrow partials) and
+    the relational grouped fold — must give, per group, the bytes of a
+    local-tier ``HG64(5)`` build over that group's values."""
+    from hg64spark import relational
+
+    rows, schema, gcols = _FOLD_CASES[case]
+    df = spark.createDataFrame(rows, schema).repartition(3)
+    ng = len(gcols)
+    by_group: dict = {}
+    for r in rows:
+        by_group.setdefault(_nan_safe(r[:ng]), []).append(r[-1])
+    want = {
+        k: HG64(5).add_values(np.array(v, dtype=np.uint64)).serialize() for k, v in by_group.items()
+    }
+    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
+    try:
+        builds = {"arrow": agg.sketch_agg(df, "v", gcols, lambda: HG64(5), HG64.deserialize)}
+        if gcols:  # the global relational build folds driver-side, not here
+            builds["relational"] = relational.hg64_agg_relational(df, "v", gcols, 5)
+        else:
+            plan = builds["arrow"]._jdf.queryExecution().executedPlan().toString()
+            assert "SinglePartition" in plan and "Coalesce" not in plan, plan
+        for name, out in builds.items():
+            got = {_nan_safe(tuple(r[c] for c in gcols)): bytes(r["sketch"]) for r in out.collect()}
+            assert got == want, (case, name)
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
+
+
+def test_fold_groups_order_sensitive_partials_are_permutation_invariant(spark):
+    """Grouped KLL and MG partials arriving in two different orders must
+    merge to the same bytes: the local merge of each group's blobs in
+    sorted-bytes order."""
+    from hg64spark.sketches import KLL, MG
+
+    rng = np.random.default_rng(11)
+    for make, deserialize in (
+        (lambda i: KLL(32, seed=i + 1).add_values(rng.integers(0, 10**6, 3000)), KLL.deserialize),
+        (lambda i: MG(2).add_values(rng.integers(0, 6, 40)), MG.deserialize),
+    ):
+        parts = [(g, make(i).serialize()) for g in ("x", "y", None) for i in range(5)]
+        want = {}
+        for g in ("x", "y", None):
+            blobs = sorted(b for k, b in parts if k == g)
+            sk = deserialize(blobs[0])
+            for b in blobs[1:]:
+                sk.merge(deserialize(b))
+            want[g] = sk.serialize()
+        for order in (range(len(parts)), rng.permutation(len(parts))):
+            pdf = spark.createDataFrame(
+                [(parts[i][0], bytearray(parts[i][1])) for i in order], "g string, sketch binary"
+            ).repartition(4)
+            got = {r["g"]: bytes(r["sketch"]) for r in agg.merge_sketches(pdf, ["g"], deserialize).collect()}
+            assert got == want
 
 
 def test_scans_are_pruned_and_filters_pushed(spark):
